@@ -56,6 +56,18 @@ def rss_bytes(pid: int) -> int:
         return 0
 
 
+def cpu_times() -> tuple[float, float]:
+    """Machine-wide (busy, steal) CPU seconds since boot from the
+    ``cpu`` line of ``/proc/stat``: busy is user + nice + system + irq +
+    softirq, steal the time the host ran something else while one of
+    this machine's virtual CPUs wanted to run."""
+    with open("/proc/stat") as f:
+        fields = f.readline().split()
+    user, nice, system, _idle, _iowait, irq, softirq, steal = map(int, fields[1:9])
+    hz = os.sysconf("SC_CLK_TCK")
+    return (user + nice + system + irq + softirq) / hz, steal / hz
+
+
 def tree_rss_bytes(root: int) -> int:
     return rss_bytes(root) + sum(rss_bytes(p) for p in descendants(root))
 

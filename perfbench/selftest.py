@@ -216,6 +216,29 @@ class ProcFs(unittest.TestCase):
         self.assertGreater(procfs.tree_rss_bytes(os.getpid()), 0)
         self.assertIn(os.getppid(), procfs.parent_map().values())
 
+    def test_cpu_times_do_not_go_back(self):
+        busy0, steal0 = procfs.cpu_times()
+        sum(i * i for i in range(200_000))
+        busy1, steal1 = procfs.cpu_times()
+        self.assertGreater(busy0, 0)
+        self.assertGreaterEqual(busy1, busy0)
+        self.assertGreaterEqual(steal1, steal0)
+
+
+class MachineSpeed(unittest.TestCase):
+    def test_steal_share(self):
+        import run
+
+        # 3 s busy and 1 s stolen between the readings
+        self.assertAlmostEqual(run.steal_share((10.0, 1.0), (13.0, 2.0)), 0.25)
+        self.assertEqual(run.steal_share((5.0, 1.0), (5.0, 1.0)), 0.0)
+
+    def test_wall_at_reference_speed(self):
+        import run
+
+        self.assertAlmostEqual(run.at_reference(12.0, 0.0, 1.5), 8.0)
+        self.assertAlmostEqual(run.at_reference(8.0, 0.75, 1.0), 8.0 * 0.25**run.STEAL_EXPONENT)
+
 
 if __name__ == "__main__":
     unittest.main()

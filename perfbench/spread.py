@@ -1,6 +1,6 @@
 """Run-to-run spread of the end-to-end metrics.
 
-    python3 perfbench/spread.py --workload paper_sim --seeds 1-10 [--seconds 10] [--trace 0]
+    python3 perfbench/spread.py --workload paper_sim --seeds 1-10 [--seconds 5] [--trace 0]
 
 Runs ``perfbench/run.py`` once per seed, one run at a time, and prints
 for every metric its median and the distance between the first and

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from data_integration_with_pseudoweights_and_survey_calibration_spark.operators import (
     calibration,
-    cox,
     dense_suite,
     jackknife,
     method_suite,
@@ -58,22 +57,29 @@ class PaperSim:
     jackknife variance of every method's x1 coefficient."""
 
     name = "paper_sim"
-    # Sample geometry and jackknife of the reference study (600/300,
-    # 60 + 30 groups, three measurement-error variants).  The population
-    # is smaller than the reference's 300k and the distributed suite runs
-    # the IPSW method only: a full 16-method draw takes 80-90 s on 4
-    # cores, more than one benchmark run may spend.
+    # Sample geometry and jackknife groups of the reference study
+    # (600/300, 60 + 30 groups).  The population is smaller than the
+    # reference's 300k, the distributed suite runs the IPSW method only
+    # and the jackknife the first measurement-error variant only: a full
+    # 16-method draw takes 80-90 s on 4 cores, and a run has to fit a
+    # warm-up draw and two measured draws into about a minute.
     n_pop = 20_000
     n_cohort = 600
     n_survey = 300
     m_jk = 60
     n_jk = 30
-    jk_variants = (1, 2, 3)
+    jk_variants = (1,)
     base_methods = ("ipsw",)
 
     def prepare(self, spark: SparkSession, seed: int) -> None:
         self.seed = seed
-        pop = simulation.generate_population(spark, self.n_pop, seed=seed).cache()
+        # measurement-error columns only for the variants the draws read
+        pop = simulation.generate_population(
+            spark,
+            self.n_pop,
+            seed=seed,
+            error_profiles=simulation.ERROR_PROFILES[: max(self.jk_variants)],
+        ).cache()
         self.pop_events = float(pop.agg(F.sum("d")).collect()[0][0])
         self.lam = survival.lambda_star_pop(pop).cache()
         self.lam.count()
@@ -179,14 +185,17 @@ class PaperSim:
 
 class CohortScale:
     """A large non-probability cohort weighted to a survey: IPSW and
-    kernel weights, post-stratification to population cell counts, a
-    weighted Cox fit and Breslow cumulative hazards."""
+    kernel weights, then post-stratification to population cell
+    counts."""
 
     name = "cohort_scale"
     # Scaled down from 1M / 100k / 25k so that a benchmark run stays near
     # a minute on 4 cores; the cohort is still 8x the paper's, so the KW
-    # pair job and the Cox scans carry executor work, not only driver
-    # round trips.
+    # pair job carries executor and Python-worker work, not only driver
+    # round trips.  The Cox fit and Breslow hazard of the reference
+    # workload are left out: at this size they are the same driver-bound
+    # loops that paper_sim measures on every draw, and with them a run
+    # could not fit a warm-up draw and a measured draw into a minute.
     n_pop = 25_000
     n_cohort = 5_000
     n_survey = 1_250
@@ -217,40 +226,23 @@ class CohortScale:
         )
         with span("calibration.post_stratify"):
             post = calibration.post_stratify(weighted, self.cell_col, "kw", self.cells)
-            df = post.df.cache()
             totals = (
-                df.groupBy(self.cell_col)
+                post.df.groupBy(self.cell_col)
                 .agg(
                     F.sum("post_wt").alias("post"),
                     F.sum("kw").alias("kw"),
                 )
                 .collect()
             )
-        fit = cox.cox_fit(df, X_COLS, w="post_wt")
-        with span("survival.breslow_cum_hazard"):
-            lam = (
-                survival.breslow_cum_hazard(
-                    df.withColumn("_rel", fit.rel_hzd()),
-                    T_STAR,
-                    w="post_wt",
-                    rel_hzd="_rel",
-                )
-                .orderBy("t_star")
-                .collect()
-            )
-        df.unpersist()
         return dict(
             survey=survey,
             kw_total=sum(r["kw"] for r in totals),
             cell_totals={int(r[self.cell_col]): r["post"] for r in totals},
-            fit=fit,
-            cum_hzd=[r["cum_hzd"] for r in lam],
         )
 
     def check(self, out: dict) -> list[str]:
-        """KW weights sum to the survey weight total, post-stratified
-        cells sum to the population counts, the Cox fit converged and
-        the cumulative hazard does not decrease."""
+        """KW weights sum to the survey weight total and post-stratified
+        cells sum to the population counts."""
         problems = []
         survey_total = float(out["survey"].agg(F.sum("wt")).collect()[0][0])
         if not _close(out["kw_total"], survey_total, 1e-9):
@@ -260,13 +252,6 @@ class CohortScale:
         for cell, total in out["cell_totals"].items():
             if not _close(total, self.cells.get(cell, float("nan")), 1e-9):
                 problems.append(f"cell {cell}: post-stratified {total} != {self.cells.get(cell)}")
-        if not out["fit"].converged:
-            problems.append(f"Cox fit did not converge in {out['fit'].n_iter} iterations")
-        lam = out["cum_hzd"]
-        if len(lam) != len(T_STAR) or not all(math.isfinite(v) for v in lam):
-            problems.append(f"cumulative hazard {lam}")
-        elif any(b < a for a, b in zip(lam, lam[1:])):
-            problems.append(f"cumulative hazard decreases: {lam}")
         return problems
 
 
