@@ -124,6 +124,10 @@ from data_integration_with_pseudoweights_and_survey_calibration_spark.operators.
     quality_features as text_quality_features,
 )
 from data_integration_with_pseudoweights_and_survey_calibration_spark.sources import tpch  # noqa: E402
+from data_integration_with_pseudoweights_and_survey_calibration_spark.session import (  # noqa: E402
+    AQE_OFF,
+    scoped_conf,
+)
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -187,21 +191,11 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort_s = scored.where(F.col("trt") == 1)
     survey_s = scored.where(F.col("trt") == 0)
     cohort_w = cohort_s.withColumn("ipsw", F.exp(-F.col("p_score")) / a)
-    # AQE pinned OFF for the kw fit's eager jobs (optimization round
-    # 12 — same reasoning/identity evidence as _q_kw_kernels): the
-    # bandwidth, histogram and post-block aggregates are fixed shapes
-    # that pay an extra AQE stage-job barrier each for nothing.
-    _aqe = "spark.sql.adaptive.enabled"
-    _old_aqe = spark.conf.get(_aqe)
-    spark.conf.set(_aqe, "false")
-    try:
-        kw = kw_weights(
-            cohort_s.select("id", "p_score"),
-            survey_s.select("id", "p_score", "wt"),
-            weight_col="wt",
-        )
-    finally:
-        spark.conf.set(_aqe, _old_aqe)
+    kw = kw_weights(
+        cohort_s.select("id", "p_score"),
+        survey_s.select("id", "p_score", "wt"),
+        weight_col="wt",
+    )
     cohort_w = cohort_w.join(kw.weights, "id")
     return cohort_w.agg(
         F.count(F.lit(1)).alias("n_cohort"),
@@ -540,25 +534,16 @@ def _q_jk_cox_refits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scheduling-latency-bound Newton passes.
     from concurrent.futures import ThreadPoolExecutor
 
-    # Pin AQE OFF across the WHOLE overlap region (optimization round
-    # 12): cox_fit scopes spark.sql.adaptive.enabled=false for its
-    # Newton loop (guide §1.2 — one stage-job barrier per iteration
-    # instead of two), and the conf is session-global, so the
-    # concurrently-planned replicate checkpoint must see ONE
-    # deterministic value rather than racing the toggle.  The replicate
-    # plan's only exchange is the user-specified repartition on the
-    # group key, which AQE never touches anyway — output captured
+    # AQE_OFF across the WHOLE overlap region, not only cox_fit's own
+    # Newton scope: the replicate checkpoint is planned concurrently and
+    # must see ONE deterministic value whichever thread gets there
+    # first.  Its only exchange is the user-specified repartition on
+    # the group key, which AQE never touches anyway — output captured
     # byte-identical at sf0.001/0.01/0.1.
-    _aqe_key = "spark.sql.adaptive.enabled"
-    _old_aqe = spark.conf.get(_aqe_key)
-    spark.conf.set(_aqe_key, "false")
-    try:
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            reps_fut = pool.submit(lambda: reps.localCheckpoint(eager=True))
-            full = cox_fit(samp, ["x1", "x2"], w="wt")
-            reps = reps_fut.result()
-    finally:
-        spark.conf.set(_aqe_key, _old_aqe)
+    with scoped_conf(spark, AQE_OFF), ThreadPoolExecutor(max_workers=1) as pool:
+        reps_fut = pool.submit(lambda: reps.localCheckpoint(eager=True))
+        full = cox_fit(samp, ["x1", "x2"], w="wt")
+        reps = reps_fut.result()
     spark = samp.sparkSession
     full_row = spark.createDataFrame(
         [
@@ -1346,29 +1331,14 @@ def _q_kw_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the FIFO scheduler backfills one branch's block-job tail and
     # driver round trips with the other's tasks. Results are identical:
     # each branch is the same kw_weights call, just submitted from its
-    # own driver thread.
-    #
-    # AQE pinned OFF across the whole region (optimization round 12,
-    # guide §1.2): every eager job here is a fixed-shape aggregate /
-    # explicitly-repartitioned block pass AQE cannot improve but
-    # splits into extra stage-job barriers with a re-optimization each
-    # (the histogram, bandwidth and post-block aggregates all pay 2
-    # jobs for 1).  Pinned around BOTH branch threads so every
-    # concurrently-planned query sees one deterministic value; output
-    # captured byte-identical at sf0.001/0.01/0.1 (per-group partial
-    # merges are map-ordered at any reduce partition count).
+    # own driver thread, and both threads' AQE-off scopes join one
+    # reentrant session-conf scope (``session.scoped_conf``).
     from concurrent.futures import ThreadPoolExecutor
 
-    _aqe = "spark.sql.adaptive.enabled"
-    _old_aqe = spark.conf.get(_aqe)
-    spark.conf.set(_aqe, "false")
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fg = pool.submit(branch, "gauss", "dnorm", KW_H)
-            ft = pool.submit(branch, "triang", "triang", KW_TRIANG_H)
-            gauss, triang = fg.result(), ft.result()
-    finally:
-        spark.conf.set(_aqe, _old_aqe)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fg = pool.submit(branch, "gauss", "dnorm", KW_H)
+        ft = pool.submit(branch, "triang", "triang", KW_TRIANG_H)
+        gauss, triang = fg.result(), ft.result()
     return gauss.unionByName(triang)
 
 
@@ -1983,11 +1953,6 @@ def _sql_exact_dedup() -> str:
     """
 
 
-def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = ngram_jaccard_pairs(_docs(spark, sf_dir), JACCARD_TAU)
-    return out.select("id_a", "id_b", F.round("jaccard", 9).alias("jaccard"))
-
-
 def _sql_ngram_jaccard() -> str:
     return f"""
     WITH t AS (SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
@@ -2032,13 +1997,6 @@ def _q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_minhash_signatures() -> str:
     cols = ", ".join(f"sig_{i}" for i in range(MINHASH_K))
     return f"WITH {_minhash_sql_core()} SELECT doc_id, {cols} FROM sig"
-
-
-def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = minhash_lsh_pairs(
-        _docs(spark, sf_dir), JACCARD_TAU, num_hashes=MINHASH_K, bands=MINHASH_BANDS
-    )
-    return out.select("id_a", "id_b", F.round("jaccard_est", 9).alias("jaccard_est"))
 
 
 def _minhash_pairs_sql_ctes() -> str:
@@ -4040,19 +3998,13 @@ def _stream_state_partitions(spark: SparkSession, *paths: str):
         except OSError:  # remote / unstatable: leave the conf alone
             total = 0
             break
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old_nodata = spark.conf.get(nodata_key, "true")
+    settings = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
     if total:
         n = spark.sparkContext.defaultParallelism
         want = max(4, min(n, (total + (4 << 20) - 1) // (4 << 20)))
-        spark.conf.set("spark.sql.shuffle.partitions", str(want))
-    spark.conf.set(nodata_key, "false")
-    try:
+        settings["spark.sql.shuffle.partitions"] = str(want)
+    with scoped_conf(spark, settings):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.conf.set(nodata_key, old_nodata)
 
 
 def _q_streaming_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -90,14 +90,3 @@ def weighted_quantiles(
         .groupBy("prob")
         .agg(F.min("_x").alias("q"))
     )
-
-
-def cv_factor(weight: str | Column) -> Column:
-    """Composite-weight effective-sample-size share numerator
-    ``var(w)/mean(w^2) + 1`` of the reference's ``a_cv``
-    (``jk_fun.R:136-139``); divide by n on the driver."""
-    w = _c(weight)
-    n = F.count(F.lit(1))
-    var = (F.sum(w * w) - F.sum(w) * F.sum(w) / n) / (n - 1)
-    mean_sq = F.sum(w * w) / n
-    return var / mean_sq + F.lit(1.0)

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.design import linear_predictor
 from ..linalg import solve_sym, vec_to_sym
+from ..session import AQE_OFF, scoped_conf
 
 
 @dataclass(frozen=True)
@@ -184,46 +185,34 @@ def cox_fit(
     p = len(x_cols)
     beta = np.zeros(p) if init is None else np.asarray(init, dtype=float)
     base = df.select(*dict.fromkeys([t, d, w, *x_cols])).cache()
-    # Scope ADAPTIVE EXECUTION OFF for the Newton loop (optimization
-    # round 12, guide §1.2) — same reasoning and measurement as
-    # ``glm.weighted_logistic``: the per-iteration grid pass is a fixed
-    # agg+cumsum+agg shape over the cached projection; AQE adds a
-    # stage-job barrier + re-optimization per iteration and changes
-    # nothing (values verified identical to the last bit).  Session-
-    # global conf: callers that overlap OTHER driver-thread planning
-    # with the fit must pin the conf around the whole overlap region so
-    # every concurrently-planned query sees one deterministic value
-    # (see ``_q_jk_cox_refits``).
-    spark = df.sparkSession
-    aqe_key = "spark.sql.adaptive.enabled"
-    old_aqe = spark.conf.get(aqe_key)
-    spark.conf.set(aqe_key, "false")
+    # The per-iteration grid pass is a fixed agg+cumsum+agg shape over
+    # the cached projection (AQE_OFF; values identical to the last bit).
     try:
-        # Resolve the huge-grid route ONCE: the distinct-t grid's row
-        # count is invariant across Newton iterations (β changes
-        # values, never the set of distinct t), so probing per
-        # iteration is pure waste (round-7 regression, fixed r8).  The
-        # probe job doubles as the cache materializer for `base`.
-        from ..functions.cumsum import grid_route_buckets
+        with scoped_conf(df.sparkSession, AQE_OFF):
+            # Resolve the huge-grid route ONCE: the distinct-t grid's row
+            # count is invariant across Newton iterations (β changes
+            # values, never the set of distinct t), so probing per
+            # iteration is pure waste (round-7 regression, fixed r8).  The
+            # probe job doubles as the cache materializer for `base`.
+            from ..functions.cumsum import grid_route_buckets
 
-        route = grid_route_buckets(base, t, "auto")
-        converged = False
-        it = 0
-        u = np.zeros(p)
-        h = np.eye(p)
-        for it in range(1, max_iter + 1):
+            route = grid_route_buckets(base, t, "auto")
+            converged = False
+            it = 0
+            u = np.zeros(p)
+            h = np.eye(p)
+            for it in range(1, max_iter + 1):
+                grid = _grid_terms(base, x_cols, beta, t, d, w, route)
+                u, h, _ = _score_hessian(grid, p)
+                step = solve_sym(h, u)
+                beta = beta + step
+                if float(np.max(np.abs(step))) < tol:
+                    converged = True
+                    break
+            # Final score check at the solution (reference ``U()`` diagnostic).
             grid = _grid_terms(base, x_cols, beta, t, d, w, route)
-            u, h, _ = _score_hessian(grid, p)
-            step = solve_sym(h, u)
-            beta = beta + step
-            if float(np.max(np.abs(step))) < tol:
-                converged = True
-                break
-        # Final score check at the solution (reference ``U()`` diagnostic).
-        grid = _grid_terms(base, x_cols, beta, t, d, w, route)
-        u, h, snorm = _score_hessian(grid, p)
+            u, h, snorm = _score_hessian(grid, p)
     finally:
-        spark.conf.set(aqe_key, old_aqe)
         base.unpersist(blocking=False)
     return CoxFit(tuple(x_cols), beta, it, converged, snorm, h)
 

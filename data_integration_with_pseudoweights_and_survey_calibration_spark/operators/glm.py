@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.design import linear_predictor
 from ..linalg import solve_sym
+from ..session import AQE_OFF, scoped_conf
 from .gram import gram_and_xtwz
 
 
@@ -88,55 +89,43 @@ def weighted_logistic(
     base = df.select(*sel).cache()
     y = F.col(y_col).cast("double")
 
-    # Scope ADAPTIVE EXECUTION OFF for the fit (optimization round 12,
-    # guide §1.2 driver barriers): each iteration's (X'WX, X'Wz) agg is
-    # a fixed two-stage global aggregate over the cached projection —
-    # AQE has nothing to re-plan (one group, no join, no skew) but
-    # executes it as TWO stage-jobs with an extra driver barrier and a
-    # re-optimization pass per iteration.  Measured on the flagship
-    # IRLS at sf0.1: identical beta to the last bit, ~20% less loop
-    # wall.  The conf is session-global, so this helper must not run
-    # concurrently with other driver threads' query PLANNING — every
-    # current caller (flagship, propensity fit, quality trainer) fits
-    # from the main thread with no concurrent planning.
-    spark = df.sparkSession
-    aqe_key = "spark.sql.adaptive.enabled"
-    old_aqe = spark.conf.get(aqe_key)
-    spark.conf.set(aqe_key, "false")
+    # Each iteration's (X'WX, X'Wz) agg is one fixed-shape global
+    # aggregate over the cached projection (AQE_OFF; measured on the
+    # flagship IRLS at sf0.1: identical beta, ~20% less loop wall).
     try:
-        converged = False
-        it = 0
-        for it in range(1, max_iter + 1):
-            if it == 1:
-                # glm.fit's mustart: mu0 = (w y + 0.5)/(w + 1) row-wise,
-                # eta0 = logit(mu0) -- one fewer wasted Newton step than
-                # starting from beta = 0 (the first pass already solves
-                # against a data-informed working response).
-                mu = (w * y + F.lit(0.5)) / (w + F.lit(1.0))
-                mu = F.greatest(F.lit(1e-12), F.least(F.lit(1.0 - 1e-12), mu))
-                eta = F.log(mu / (F.lit(1.0) - mu))
-            else:
-                eta = linear_predictor(x_cols, beta)
-                mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-                # Guard against saturation exactly like glm.fit's eps clamps.
-                mu = F.greatest(F.lit(1e-12), F.least(F.lit(1.0 - 1e-12), mu))
-            wvar = mu * (F.lit(1.0) - mu)
-            ww = w * wvar
-            z = eta + (y - mu) / wvar
-            xtwx, xtwz = gram_and_xtwz(base, x_cols, z, ww)
-            if ridge > 0.0:
-                pen = np.full(p, float(ridge))
-                for c in ridge_skip:
-                    pen[x_cols.index(c)] = 0.0
-                xtwx = xtwx + np.diag(pen)
-            new_beta = solve_sym(xtwx, xtwz)
-            delta = float(np.max(np.abs(new_beta - beta)))
-            beta = new_beta
-            if it > 1 and delta < tol:
-                converged = True
-                break
+        with scoped_conf(df.sparkSession, AQE_OFF):
+            converged = False
+            it = 0
+            for it in range(1, max_iter + 1):
+                if it == 1:
+                    # glm.fit's mustart: mu0 = (w y + 0.5)/(w + 1) row-wise,
+                    # eta0 = logit(mu0) -- one fewer wasted Newton step than
+                    # starting from beta = 0 (the first pass already solves
+                    # against a data-informed working response).
+                    mu = (w * y + F.lit(0.5)) / (w + F.lit(1.0))
+                    mu = F.greatest(F.lit(1e-12), F.least(F.lit(1.0 - 1e-12), mu))
+                    eta = F.log(mu / (F.lit(1.0) - mu))
+                else:
+                    eta = linear_predictor(x_cols, beta)
+                    mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
+                    # Guard against saturation exactly like glm.fit's eps clamps.
+                    mu = F.greatest(F.lit(1e-12), F.least(F.lit(1.0 - 1e-12), mu))
+                wvar = mu * (F.lit(1.0) - mu)
+                ww = w * wvar
+                z = eta + (y - mu) / wvar
+                xtwx, xtwz = gram_and_xtwz(base, x_cols, z, ww)
+                if ridge > 0.0:
+                    pen = np.full(p, float(ridge))
+                    for c in ridge_skip:
+                        pen[x_cols.index(c)] = 0.0
+                    xtwx = xtwx + np.diag(pen)
+                new_beta = solve_sym(xtwx, xtwz)
+                delta = float(np.max(np.abs(new_beta - beta)))
+                beta = new_beta
+                if it > 1 and delta < tol:
+                    converged = True
+                    break
     finally:
-        spark.conf.set(aqe_key, old_aqe)
         base.unpersist(blocking=False)
     return GlmFit(tuple(x_cols), beta, it, converged)
 

@@ -58,6 +58,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import AQE_OFF, scoped_conf
 from .similarity import (
     _assign_udf,
     cosine_expr,
@@ -395,53 +396,47 @@ def pq_codebooks(
                 yield pd.Series(out, dtype=object)
 
     vecs = train.select(xform(F.col(vec_col)).alias("_v")).cache()
-    # AQE off for the Lloyd rounds — see similarity.kmeans_centroids
-    # (optimization round 12): one stage-job per round instead of 2-3,
-    # values unchanged (unique-key grouped agg + per-key driver
-    # assignment; bit-identity asserted by tests/test_pq.py).
-    spark = corpus.sparkSession
-    _aqe = "spark.sql.adaptive.enabled"
-    _old_aqe = spark.conf.get(_aqe)
-    spark.conf.set(_aqe, "false")
+    # AQE_OFF for the Lloyd rounds: one stage-job per round instead of
+    # 2-3 (bit-identity asserted by tests/test_pq.py).
     try:
-        for _ in range(int(max_iter)):
-            # vectors are already in quantizer space
-            encode = _codes_udf(cb, as_binary=False, normalize=False)
-            coded = vecs.withColumn("_codes", encode("_v"))
-            # training-space component values, keyed by (position, code
-            # of the subspace that owns the position)
-            sums = (
-                coded.select(
-                    F.posexplode(F.col("_v")).alias("_p", "_x"),
-                    F.col("_x").cast("double").alias("_xn"),
-                    F.col("_codes"),
+        with scoped_conf(corpus.sparkSession, AQE_OFF):
+            for _ in range(int(max_iter)):
+                # vectors are already in quantizer space
+                encode = _codes_udf(cb, as_binary=False, normalize=False)
+                coded = vecs.withColumn("_codes", encode("_v"))
+                # training-space component values, keyed by (position, code
+                # of the subspace that owns the position)
+                sums = (
+                    coded.select(
+                        F.posexplode(F.col("_v")).alias("_p", "_x"),
+                        F.col("_x").cast("double").alias("_xn"),
+                        F.col("_codes"),
+                    )
+                    .select(
+                        "_p",
+                        "_xn",
+                        F.element_at(
+                            "_codes", (F.col("_p") / F.lit(dsub)).cast("int") + 1
+                        ).alias("_code"),
+                    )
+                    .groupBy("_p", "_code")
+                    .agg(F.sum("_xn").alias("_s"), F.count(F.lit(1)).alias("_n"))
+                    .collect()
                 )
-                .select(
-                    "_p",
-                    "_xn",
-                    F.element_at(
-                        "_codes", (F.col("_p") / F.lit(dsub)).cast("int") + 1
-                    ).alias("_code"),
-                )
-                .groupBy("_p", "_code")
-                .agg(F.sum("_xn").alias("_s"), F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
-            new = cb.copy()
-            acc = np.zeros((m, k_eff, dsub))
-            cnt = np.zeros((m, k_eff))
-            for r in sums:
-                s, d = divmod(int(r["_p"]), dsub)
-                acc[s, r["_code"], d] += r["_s"]
-                cnt[s, r["_code"]] = r["_n"]
-            nonempty = cnt > 0
-            new[nonempty] = acc[nonempty] / cnt[nonempty][:, None]
-            if np.allclose(new, cb, atol=1e-9):
+                new = cb.copy()
+                acc = np.zeros((m, k_eff, dsub))
+                cnt = np.zeros((m, k_eff))
+                for r in sums:
+                    s, d = divmod(int(r["_p"]), dsub)
+                    acc[s, r["_code"], d] += r["_s"]
+                    cnt[s, r["_code"]] = r["_n"]
+                nonempty = cnt > 0
+                new[nonempty] = acc[nonempty] / cnt[nonempty][:, None]
+                if np.allclose(new, cb, atol=1e-9):
+                    cb = new
+                    break
                 cb = new
-                break
-            cb = new
     finally:
-        spark.conf.set(_aqe, _old_aqe)
         vecs.unpersist()
     return _stamp(cb, centroids is not None)
 

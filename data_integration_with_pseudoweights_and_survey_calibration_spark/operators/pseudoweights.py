@@ -22,17 +22,13 @@ at the kernel's numeric support width, cohort rows are replicated to
 the 3 adjacent buckets, and each (bucket, salt) group is sized by
 **density-aware salting** (per-bucket salt counts from exact bucket
 histograms, so every task carries the same number of kernel pairs no
-matter how the scores pile up). Two execution paths over that layout:
-
-- ``impl='block'`` (default): one ``applyInPandas`` pass; the 3-bucket
-  replication invariant puts every in-support cohort row in the group,
-  so kernel row sums, normalization, and per-cohort column sums are all
-  computed locally as sorted, cache-blocked numpy windows (searchsorted
-  band limits, fused in-place ufuncs) -- only one small partial row per
-  replicated cohort unit leaves the workers.
-- ``impl='sql'``: pure-JVM two-pass banded hash join (no Python
-  workers) with map-side combined aggregations -- kept for
-  environments without Arrow workers.
+matter how the scores pile up). One ``applyInPandas`` pass runs over
+that layout: the 3-bucket replication invariant puts every in-support
+cohort row in the group, so kernel row sums, normalization, and
+per-cohort column sums are all computed locally as sorted,
+cache-blocked numpy windows (searchsorted band limits, fused in-place
+ufuncs) -- only one small partial row per replicated cohort unit
+leaves the workers.
 
 No cross join, no skew ceiling, work linear in the number of
 *numerically non-zero* kernel pairs. For the Gaussian kernel
@@ -49,7 +45,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.kernels import KERNELS, KERNELS_NP, TRIANG_BW_SCALE
+from ..functions.kernels import KERNELS_NP, TRIANG_BW_SCALE
+from ..session import AQE_OFF, scoped_conf
 
 # Numeric support of the Gaussian kernel. dnorm underflows to exact
 # 0.0 at |z| ~ 38.6; a pair at |z| = 8 contributes K(8)/K(0) = e^-32
@@ -313,7 +310,6 @@ def kw_weights(
     rm_s: bool = False,
     salt: int = 64,
     deriv_cols: Sequence[str] | None = None,
-    impl: str = "block",
 ) -> KwResult:
     """I3 (+I4 with ``deriv_cols``): KW kernel pseudo-weights via
     banded bucket join.
@@ -332,40 +328,17 @@ def kw_weights(
         pw_beta[c, g] = sum_s wt_s kij[s,c,g] / rs_s
                       - sum_s wt_s (sum_c' kij[s,c',g]) k[s,c] / rs_s^2
 
-    -- two grouped passes over the SAME pair stream as the weights
-    (map-side combined; only n_s + n_c rows ever shuffle). Output
-    columns ``kw_g_<name>``.
+    -- in the SAME block pass as the weights. Output columns
+    ``kw_g_<name>``.
     """
-    if h is None:
-        h = bw_nrd0(cohort_scores, score_col)
-        if kernel == "triang":
-            h = h * TRIANG_BW_SCALE
-    kfun = KERNELS[kernel]
-    support = GAUSSIAN_SUPPORT if kernel in ("dnorm", "gaussian") else TRIANG_SUPPORT
-    width = support * h
-
+    if kernel not in KERNELS_NP:
+        raise ValueError(f"unknown kernel {kernel!r}")
     # The gamma-derivative pair algebra kij = -K(z)*dist*dx/h^2 is the
     # formula ``krnwt`` applies for EVERY kernel choice
     # (``simu_fun.R:196-205`` uses the same kij with whatever krnfun the
     # caller picked), so deriv_cols work for dnorm and triang alike.
     dcols = list(deriv_cols or [])
-    if dcols and kernel not in KERNELS:
-        raise ValueError(f"unknown kernel {kernel!r}")
-
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _dbg = bool(_os.environ.get("SPARK_GRAFT_KW_DEBUG"))
-    _t = _time.time()
-
-    def _mark(label: str) -> None:
-        nonlocal _t
-        if _dbg:
-            now = _time.time()
-            print(f"MARK kw {label} {now - _t:.2f}", file=_sys.stderr)
-            _t = now
-
+    q = len(dcols)
     c = cohort_scores.select(
         F.col(c_id).alias("_cid"),
         F.col(score_col).alias("_ps_c"),
@@ -378,92 +351,97 @@ def kw_weights(
         *[F.col(x).alias(f"_xs_{j}") for j, x in enumerate(dcols)],
     )
 
-    # Banded bucket equi-join: a survey row sits in bucket
-    # floor(ps/width); cohort rows replicate to the 3 adjacent buckets so
-    # every pair with |ps_s - ps_c| <= width meets on an equality key
-    # (plain shuffle hash join -- SURVEY §4.2 "band join").
-    #
-    # DENSITY-AWARE SALTING: propensity scores concentrate, so per-bucket
-    # pair loads are wildly skewed (one bucket can hold >3/4 of all kernel
-    # pairs) and a single global salt count either under-splits the hot
-    # bucket or replicates the cold ones for nothing. Two tiny histogram
-    # aggs (n_c + n_s input rows) give the exact per-bucket pair load
-    # load_b = ns_b * (nc_{b-1}+nc_b+nc_{b+1}); each bucket then gets its
-    # own salt count ~ load_b / (total_load / n_part), so every join task
-    # carries about the same number of kernel evaluations regardless of
-    # where the scores pile up. Buckets with zero load drop out of the
-    # join entirely (their rows cannot pair; unmatched handling below
-    # still sees them through the anti-join on `s`).
-    bkt_c = F.floor(F.col("_ps_c") / width).cast("long")
-    bkt_s = F.floor(F.col("_ps_s") / width).cast("long")
-    # ONE driver round trip for the cohort size AND both bucket
-    # histograms (optimization round 11, guide §1.2/§2.4: the former
-    # count() + two separate histogram collects were three serialized
-    # jobs over the same two inputs; m is exactly the cohort histogram
-    # total, and the union'd histogram job scans each side once).
-    hist_rows = (
-        c.select(F.lit(1).alias("_hside"), bkt_c.alias("b"))
-        .unionByName(s.select(F.lit(0).alias("_hside"), bkt_s.alias("b")))
-        .groupBy("_hside", "b")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    nc_hist = {
-        int(r["b"]): int(r["n"]) for r in hist_rows if r["_hside"] == 1
-    }
-    ns_hist = {
-        int(r["b"]): int(r["n"]) for r in hist_rows if r["_hside"] == 0
-    }
-    m = sum(nc_hist.values())
-    _mark("histograms")
-    loads = {
-        b: ns * (nc_hist.get(b - 1, 0) + nc_hist.get(b, 0) + nc_hist.get(b + 1, 0))
-        for b, ns in ns_hist.items()
-    }
-    total_load = sum(loads.values())
-    # Partition count tracks the cluster width AND the measured pair
-    # load (~25M kernel evals ~= 0.5 s of vectorized work per task), so
-    # the same code sizes itself from local[32] to a 1000-executor
-    # cluster instead of pinning a magic constant.
-    spark = cohort_scores.sparkSession
-    n_part = max(
-        2 * spark.sparkContext.defaultParallelism,
-        min(4096, int(total_load // 25_000_000) + 1),
-    )
-    target = max(1.0, float(total_load) / n_part)
-    max_salt = max(1, int(salt))
-    salt_rows = [
-        (b, min(max_salt, int(-(-load // target))))
-        for b, load in loads.items()
-        if load > 0
-    ]
-    salt_tbl = F.broadcast(
-        spark.createDataFrame(salt_rows or [(0, 1)], "_bkt long, _nsalt int")
-    )
-    s_b = (
-        s.withColumn("_bkt", bkt_s)
-        .join(salt_tbl, "_bkt")
-        .withColumn("_salt", F.pmod(F.hash("_sid"), F.col("_nsalt")))
-        .drop("_nsalt")
-    )
-    c_b = (
-        c.withColumn("_bkt", F.explode(F.array(bkt_c - 1, bkt_c, bkt_c + 1)))
-        .join(salt_tbl, "_bkt")
-        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_nsalt") - 1)))
-        .drop("_nsalt")
-    )
+    # Every eager phase below -- bandwidth, histograms, the block job
+    # and the unmatched count -- is a fixed-shape aggregate or an
+    # explicitly repartitioned block pass (AQE_OFF).
+    with scoped_conf(cohort_scores.sparkSession, AQE_OFF):
+        if h is None:
+            h = bw_nrd0(cohort_scores, score_col)
+            if kernel == "triang":
+                h = h * TRIANG_BW_SCALE
+        gauss = kernel in ("dnorm", "gaussian")
+        width = (GAUSSIAN_SUPPORT if gauss else TRIANG_SUPPORT) * h
 
-    q = len(dcols)
-    if impl == "block":
-        # BLOCK PATH (default): the 3-bucket replication invariant means
-        # each (bucket, salt) group already holds every cohort row within
-        # kernel support of its survey slice, so the whole computation --
-        # kernel block, row sums, normalization, per-cohort column sums --
-        # runs vectorized in numpy inside ONE applyInPandas pass. Versus
-        # the two-pass SQL join this halves the kernel evaluations and
-        # replaces per-row join probing with dense BLAS-style blocks;
-        # only tiny partial rows (one per replicated cohort row) leave
-        # the workers.
+        # Banded bucket equi-join: a survey row sits in bucket
+        # floor(ps/width); cohort rows replicate to the 3 adjacent buckets so
+        # every pair with |ps_s - ps_c| <= width meets on an equality key
+        # (plain shuffle hash join -- SURVEY §4.2 "band join").
+        #
+        # DENSITY-AWARE SALTING: propensity scores concentrate, so per-bucket
+        # pair loads are wildly skewed (one bucket can hold >3/4 of all kernel
+        # pairs) and a single global salt count either under-splits the hot
+        # bucket or replicates the cold ones for nothing. Two tiny histogram
+        # aggs (n_c + n_s input rows) give the exact per-bucket pair load
+        # load_b = ns_b * (nc_{b-1}+nc_b+nc_{b+1}); each bucket then gets its
+        # own salt count ~ load_b / (total_load / n_part), so every join task
+        # carries about the same number of kernel evaluations regardless of
+        # where the scores pile up. Buckets with zero load drop out of the
+        # join entirely (their rows cannot pair; unmatched handling below
+        # still sees them through the anti-join on `s`).
+        bkt_c = F.floor(F.col("_ps_c") / width).cast("long")
+        bkt_s = F.floor(F.col("_ps_s") / width).cast("long")
+        # ONE driver round trip for the cohort size AND both bucket
+        # histograms (optimization round 11, guide §1.2/§2.4: the former
+        # count() + two separate histogram collects were three serialized
+        # jobs over the same two inputs; m is exactly the cohort histogram
+        # total, and the union'd histogram job scans each side once).
+        hist_rows = (
+            c.select(F.lit(1).alias("_hside"), bkt_c.alias("b"))
+            .unionByName(s.select(F.lit(0).alias("_hside"), bkt_s.alias("b")))
+            .groupBy("_hside", "b")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        nc_hist = {
+            int(r["b"]): int(r["n"]) for r in hist_rows if r["_hside"] == 1
+        }
+        ns_hist = {
+            int(r["b"]): int(r["n"]) for r in hist_rows if r["_hside"] == 0
+        }
+        m = sum(nc_hist.values())
+        loads = {
+            b: ns * (nc_hist.get(b - 1, 0) + nc_hist.get(b, 0) + nc_hist.get(b + 1, 0))
+            for b, ns in ns_hist.items()
+        }
+        total_load = sum(loads.values())
+        # Partition count tracks the cluster width AND the measured pair
+        # load (~25M kernel evals ~= 0.5 s of vectorized work per task), so
+        # the same code sizes itself from local[32] to a 1000-executor
+        # cluster instead of pinning a magic constant.
+        spark = cohort_scores.sparkSession
+        n_part = max(
+            2 * spark.sparkContext.defaultParallelism,
+            min(4096, int(total_load // 25_000_000) + 1),
+        )
+        target = max(1.0, float(total_load) / n_part)
+        max_salt = max(1, int(salt))
+        salt_rows = [
+            (b, min(max_salt, int(-(-load // target))))
+            for b, load in loads.items()
+            if load > 0
+        ]
+        salt_tbl = F.broadcast(
+            spark.createDataFrame(salt_rows or [(0, 1)], "_bkt long, _nsalt int")
+        )
+        s_b = (
+            s.withColumn("_bkt", bkt_s)
+            .join(salt_tbl, "_bkt")
+            .withColumn("_salt", F.pmod(F.hash("_sid"), F.col("_nsalt")))
+            .drop("_nsalt")
+        )
+        c_b = (
+            c.withColumn("_bkt", F.explode(F.array(bkt_c - 1, bkt_c, bkt_c + 1)))
+            .join(salt_tbl, "_bkt")
+            .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_nsalt") - 1)))
+            .drop("_nsalt")
+        )
+
+        # The 3-bucket replication invariant means each (bucket, salt)
+        # group already holds every cohort row within kernel support of
+        # its survey slice, so the whole computation -- kernel block, row
+        # sums, normalization, per-cohort column sums -- runs vectorized
+        # in numpy inside ONE applyInPandas pass; only tiny partial rows
+        # (one per replicated cohort row) leave the workers.
         cid_t = dict(cohort_scores.dtypes)[c_id]
         sid_t = dict(survey_scores.dtypes)[s_id]
         s_u = s_b.select(
@@ -519,7 +497,6 @@ def kw_weights(
             )
             .cache()
         )
-        _mark("plan_build")
         # Run the unmatched aggregate and the kw-cache materialization
         # CONCURRENTLY (optimization round 11, guide §2.6): both consume
         # the `out_raw` cache — whichever job reaches a partition first
@@ -537,78 +514,10 @@ def kw_weights(
             ).collect()[0]
             _kw_fut.result()
         n_unmatched, unmatched_tot = int(urow["n"]), float(urow["tot"])
-        _mark("block_job+unmatched+kw_count")
         # The per-cohort aggregate (n_c rows) and unmatched rows are now
         # materialized; drop the bulky per-group partial cache so repeated
         # KW fits don't accumulate storage.
         out_raw.unpersist()
-    else:
-        # SQL PATH: pure-JVM two-pass banded join (no Python workers) --
-        # kept for clusters where Arrow/pandas workers are unavailable.
-        # Explicit fixed-count repartition on the (bucket, salt) key: the
-        # join's map *input* is tiny but its output explodes to O(n_s*n_c)
-        # pairs, so AQE's size-based coalescing would otherwise collapse it
-        # to 1-2 tasks. A user-specified partition count is exempt from AQE
-        # coalescing and pins the pair computation at full parallelism.
-        s_p = s_b.repartition(n_part, "_bkt", "_salt")
-        c_p = c_b.repartition(n_part, "_bkt", "_salt")
-
-        def pair_table():
-            # Recomputed (never cached, never shuffled): kernel arithmetic is
-            # cheaper than shuffling O(n_s * n_c) pair rows.
-            p = s_p.join(c_p, ["_bkt", "_salt"]).where(
-                F.abs(F.col("_ps_s") - F.col("_ps_c")) <= width
-            )
-            dist = F.col("_ps_s") - F.col("_ps_c")
-            p = p.withColumn("_k", kfun(dist, h))
-            # I4 pair terms: dK/dgamma_j = -K * dist * (x_s - x_c) / h^2
-            for j in range(len(dcols)):
-                p = p.withColumn(
-                    f"_kij_{j}",
-                    -F.col("_k") * dist * (F.col(f"_xs_{j}") - F.col(f"_xc_{j}"))
-                    / float(h * h),
-                )
-            return p
-
-        # Kernel row sums per survey unit: hash aggregate with map-side
-        # partial combine -- only n_s rows ever shuffle. Cached: consumed by
-        # the normalization join AND the unmatched check.
-        rs = pair_table().groupBy("_sid").agg(
-            F.sum("_k").alias("_rs"),
-            *[F.sum(f"_kij_{j}").alias(f"_rkij_{j}") for j in range(len(dcols))],
-        )
-        rs_pos = rs.where(F.col("_rs") > 0.0).cache()
-
-        # Column sums onto the cohort: broadcast the small (sid -> rs) table
-        # back onto a fresh pair stream; again only n_c rows shuffle.
-        kw = (
-            pair_table()
-            .join(F.broadcast(rs_pos), "_sid")
-            .groupBy("_cid")
-            .agg(
-                F.sum(F.col("_wt_s") * F.col("_k") / F.col("_rs")).alias("kw"),
-                *[
-                    F.sum(
-                        F.col("_wt_s") * F.col(f"_kij_{j}") / F.col("_rs")
-                        - F.col("_wt_s")
-                        * F.col(f"_rkij_{j}")
-                        * F.col("_k")
-                        / (F.col("_rs") * F.col("_rs"))
-                    ).alias(f"_kwg_{j}")
-                    for j in range(len(dcols))
-                ],
-            )
-        )
-
-        # Zero-match survey rows (no pair within numeric support, or an all-0
-        # kernel row): reference spreads their weight 1/m to every cohort
-        # unit (rm_s=False, ``simu_fun.R:180-183``) or drops them (True).
-        unmatched = s.join(F.broadcast(rs_pos), "_sid", "left_anti")
-        urow = unmatched.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("_wt_s"), F.lit(0.0)).alias("tot"),
-        ).collect()[0]
-        n_unmatched, unmatched_tot = int(urow["n"]), float(urow["tot"])
 
     out = c.join(kw, "_cid", "left").select(
         "_cid",

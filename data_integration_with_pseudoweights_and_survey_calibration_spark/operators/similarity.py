@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import AQE_OFF, scoped_conf
+
 
 def dot_expr(a: str | Column, b: str | Column) -> Column:
     ac = F.col(a) if isinstance(a, str) else a
@@ -324,44 +326,33 @@ def kmeans_centroids(
     cen /= np.maximum(np.linalg.norm(cen, axis=1)[:, None], 1e-12)
 
     vecs = train.select(F.col(vec_col).alias("_v")).cache()
-    # Scope ADAPTIVE EXECUTION OFF for the Lloyd rounds (optimization
-    # round 12, guide §1.2 — same reasoning/measurement as the IRLS
-    # and Newton loops): each round is one fixed-shape grouped
-    # aggregate whose collect AQE splits into 2-3 stage-jobs with a
-    # re-optimization pass, for nothing it can improve (model-sized
-    # groups, no joins).  Values are unaffected: every (cell, dim)
-    # group merges its partials in map order regardless of reduce
-    # partition count, and the driver combine assigns per unique key
-    # (bit-identity asserted by tests/test_pq.py).
-    spark = corpus.sparkSession
-    _aqe = "spark.sql.adaptive.enabled"
-    _old_aqe = spark.conf.get(_aqe)
-    spark.conf.set(_aqe, "false")
+    # Each Lloyd round is one fixed-shape grouped aggregate (AQE_OFF;
+    # bit-identity asserted by tests/test_pq.py).
     try:
-        for _ in range(int(max_iter)):
-            assign = _assign_udf(cen, 1)
-            cell = vecs.withColumn("_cell", F.element_at(assign("_v"), 1))
-            sums = (
-                cell.select("_cell", F.posexplode("_v").alias("_p", "_x"))
-                .groupBy("_cell", "_p")
-                .agg(F.sum("_x").alias("_s"), F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
-            new = cen.copy()
-            acc = np.zeros_like(cen)
-            cnt = np.zeros(cen.shape[0])
-            for r in sums:
-                acc[r["_cell"], r["_p"]] += r["_s"]
-                cnt[r["_cell"]] = r["_n"]
-            nonempty = cnt > 0
-            new[nonempty] = acc[nonempty] / cnt[nonempty, None]
-            new /= np.maximum(np.linalg.norm(new, axis=1)[:, None], 1e-12)
-            if np.allclose(new, cen, atol=1e-9):
+        with scoped_conf(corpus.sparkSession, AQE_OFF):
+            for _ in range(int(max_iter)):
+                assign = _assign_udf(cen, 1)
+                cell = vecs.withColumn("_cell", F.element_at(assign("_v"), 1))
+                sums = (
+                    cell.select("_cell", F.posexplode("_v").alias("_p", "_x"))
+                    .groupBy("_cell", "_p")
+                    .agg(F.sum("_x").alias("_s"), F.count(F.lit(1)).alias("_n"))
+                    .collect()
+                )
+                new = cen.copy()
+                acc = np.zeros_like(cen)
+                cnt = np.zeros(cen.shape[0])
+                for r in sums:
+                    acc[r["_cell"], r["_p"]] += r["_s"]
+                    cnt[r["_cell"]] = r["_n"]
+                nonempty = cnt > 0
+                new[nonempty] = acc[nonempty] / cnt[nonempty, None]
+                new /= np.maximum(np.linalg.norm(new, axis=1)[:, None], 1e-12)
+                if np.allclose(new, cen, atol=1e-9):
+                    cen = new
+                    break
                 cen = new
-                break
-            cen = new
     finally:
-        spark.conf.set(_aqe, _old_aqe)
         vecs.unpersist()
     return cen
 

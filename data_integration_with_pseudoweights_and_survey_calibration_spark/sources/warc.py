@@ -163,18 +163,6 @@ def http_response_parts(
     return status, headers, body
 
 
-def _gunzip_members(data: bytes) -> bytes:
-    """Decompress a concatenation of gzip members (the per-record
-    layout of ``.warc.gz``) into one byte stream.  A corrupt member
-    raises ``ValueError`` (never a raw ``zlib.error``) so callers can
-    quarantine the file per the corpus-audit contract.
-
-    Prefer :func:`_iter_gzip_members` in streaming contexts — this
-    helper holds the WHOLE decompressed archive, the iterator holds
-    one member at a time."""
-    return b"".join(_iter_gzip_members(data))
-
-
 def _iter_gzip_members(data: bytes) -> Iterator[bytes]:
     """Yield the decompressed bytes of each gzip member in turn.
     Memory high-water mark is ONE member (~one WARC record in the

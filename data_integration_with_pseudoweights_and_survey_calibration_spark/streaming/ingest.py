@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 
 def stream_to_bucketed(
     stream_df: DataFrame,
@@ -47,10 +49,7 @@ def stream_to_bucketed(
         # Scope the dynamic-overwrite mode to this write: the conf is
         # session-wide, and leaving it set would silently change
         # overwrite semantics for unrelated writes on the same session.
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = s.conf.get(key, None)
-        s.conf.set(key, "dynamic")
-        try:
+        with scoped_conf(s, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
             data = df.withColumn("_ingest_batch", F.lit(int(batch_id)))
             if not s.catalog.tableExists(table):
                 (
@@ -67,11 +66,6 @@ def stream_to_bucketed(
                 data.write.mode("overwrite").format("parquet").insertInto(
                     table
                 )
-        finally:
-            if prev is None:
-                s.conf.unset(key)
-            else:
-                s.conf.set(key, prev)
 
     writer = (
         stream_df.writeStream.foreachBatch(_write_batch)

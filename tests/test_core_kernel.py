@@ -108,6 +108,8 @@ def test_weighted_logistic_irls(spark):
     df, pdf = _toy(spark, n=800)
     df2, cols = DesignMatrix("x1 + x2").attach(df)
     fit = weighted_logistic(df2, cols, "y", "w")
+    # the fit's AQE-off scope is closed again on return
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     X = np.column_stack([np.ones(len(pdf)), pdf.x1, pdf.x2])
     ref = _irls_numpy(X, pdf.y.values.astype(float), pdf.w.values)
     assert fit.converged
@@ -219,6 +221,8 @@ def test_kw_weights_match_dense(spark):
         pd.DataFrame({"id": np.arange(n_s), "p_score": ps_s, "wt": wt_s})
     )
     res = kw_weights(c, s, weight_col="wt")
+    # the eager phases' AQE-off scope is closed again on return
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     got = (
         res.weights.orderBy("id").toPandas().kw.values
     )
@@ -288,7 +292,7 @@ def test_kw_gamma_derivative_vs_dense(spark):
 def test_kw_triangular_kernel_vs_dense(spark):
     """Triangular-kernel KW weights AND gamma-derivative (krnwt with
     krn='triang', simu_fun.R:129,168-205: same kij pair formula, K
-    triangular) against the dense mirror, both impls."""
+    triangular) against the dense mirror."""
     rng = np.random.default_rng(23)
     n_c, n_s = 110, 60
     c = pd.DataFrame(
@@ -317,19 +321,17 @@ def test_kw_triangular_kernel_vs_dense(spark):
     kij = -k * dist * dx / h / h
     rkij = kij.sum(axis=1)
     deriv_dense = (wt / rs) @ kij - (wt * rkij / rs / rs) @ k
-    for impl in ("block", "sql"):
-        res = kw_weights(
-            spark.createDataFrame(c),
-            spark.createDataFrame(s),
-            weight_col="wt",
-            h=h,
-            kernel="triang",
-            deriv_cols=["x1"],
-            impl=impl,
-        )
-        got = res.weights.toPandas().set_index("id").sort_index()
-        np.testing.assert_allclose(got["kw"].to_numpy(), kw_dense, rtol=1e-9)
-        np.testing.assert_allclose(
-            got["kw_g_x1"].to_numpy(), deriv_dense, rtol=1e-8, atol=1e-12
-        )
-        assert got["kw"].sum() == pytest.approx(wt.sum(), rel=1e-9)
+    res = kw_weights(
+        spark.createDataFrame(c),
+        spark.createDataFrame(s),
+        weight_col="wt",
+        h=h,
+        kernel="triang",
+        deriv_cols=["x1"],
+    )
+    got = res.weights.toPandas().set_index("id").sort_index()
+    np.testing.assert_allclose(got["kw"].to_numpy(), kw_dense, rtol=1e-9)
+    np.testing.assert_allclose(
+        got["kw_g_x1"].to_numpy(), deriv_dense, rtol=1e-8, atol=1e-12
+    )
+    assert got["kw"].sum() == pytest.approx(wt.sum(), rel=1e-9)

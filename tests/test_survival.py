@@ -246,6 +246,8 @@ def _cox_oracle(pdf, p_cols, max_iter=25, tol=1e-10):
 def test_cox_fit_weighted_breslow(spark):
     pdf = _surv_data(n=500, seed=13)
     fit = cox_fit(spark.createDataFrame(pdf), ["x1", "x2"])
+    # the Newton loop's AQE-off scope is closed again on return
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     want = _cox_oracle(pdf, ["x1", "x2"])
     assert fit.converged
     np.testing.assert_allclose(fit.beta, want, atol=1e-7)
